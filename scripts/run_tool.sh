@@ -1,8 +1,11 @@
 #!/usr/bin/env bash
 # Run a graft main directly on the compiled classpath — no sbt lock, so
-# measurement tools (Bench, StreamSoak, ScaleUp, Materialize, Verify)
-# can run while sbt test holds the build. Mirrors build.sbt's forked-JVM
-# options (JDK17 add-opens, UTC, SPARK_DRIVER_MEM).
+# measurement tools (Bench, Verify, Explain, StreamSoak, ScaleUp) can run
+# while sbt test holds the build. Mirrors build.sbt's forked-JVM options
+# (JDK17 add-opens, UTC, SPARK_DRIVER_MEM). Explain is the one tool for
+# per-query plans and timing; per-layer profiles come from
+# `python3 perfbench/run.py --workload <name> --trace 1`. Bench's JSON
+# line stays the last stdout line only at GraftSession's WARN log level.
 #
 # Usage: scripts/run_tool.sh graft.Bench [args...]
 # Env:   SPARK_DRIVER_MEM (default 8g), plus whatever the tool reads.

@@ -9,11 +9,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SQL function registry, so plain SQL can call them:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * spark.sql("SELECT cosine_similarity(embedding, query_vec) ...")
   * }}}
+  *
+  * [[GraftSession]] sets the conf on every session graft builds.
   *
   * This is the library-grade injection point (SparkSessionExtensions →
   * injectFunction): no session-mutating registration calls in user

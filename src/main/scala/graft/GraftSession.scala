@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library-recommended session tuning in one place, applied by every
-  * graft entry point (Bench/Verify/GraftApp/Explain).
+/** The one place a graft session is built: library-recommended tuning,
+  * the SQL extensions, UTC and WARN logging, applied identically by every
+  * main and by the test session.
   */
 object GraftSession {
 
@@ -93,5 +94,35 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CONF").map(_.split(";").toSeq).getOrElse(Nil)
       .map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }
       .foldLeft(withRec) { case (b, (k, v)) => b.config(k, v) }
+  }
+
+  /** CPU count of a local session: `SPARK_GRAFT_CPUS`, or else every
+    * core the JVM sees.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A `local[cpus]` session with one shuffle partition per core.
+    * `conf` adds confs that must be set before the session starts
+    * (warehouse dir, state-store provider).
+    */
+  def local(cpus: Int, conf: (String, String)*): SparkSession =
+    build(s"local[$cpus]", ("spark.sql.shuffle.partitions" -> cpus.toString) +: conf: _*)
+
+  /** A session on any master, shuffle partitions left to Spark. Logs at
+    * WARN: `Bench` relies on it so that no shutdown-hook log line lands
+    * after its final stdout line.
+    */
+  def build(master: String, conf: (String, String)*): SparkSession = {
+    val base = (Seq(
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ conf)
+      .foldLeft(SparkSession.builder().master(master).appName("graft")) {
+        case (b, (k, v)) => b.config(k, v)
+      }
+    val spark = tune(base).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps formatted physical plans for representative queries into
@@ -27,14 +26,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed 4 cores: PLANS.md shows the partition counts the tests see
+    val spark = GraftSession.local(4)
     // keep the ANN report queries' lazy lineage so the dumped plan is
     // the real computation (see RecallReport.CpTracker)
     spark.conf.set("graft.ann.releaseCheckpoints", "false")

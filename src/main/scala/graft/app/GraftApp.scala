@@ -83,12 +83,7 @@ import org.apache.spark.sql.functions.expr
 object GraftApp {
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC"))
-      .getOrCreate()
+    val spark = graft.GraftSession.build(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     try run(spark, args.toSeq)
     finally spark.stop()
   }

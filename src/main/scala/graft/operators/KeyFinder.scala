@@ -23,30 +23,17 @@ import scala.collection.parallel.CollectionConverters._
   * exactly the combination's columns — and all combinations of a size are
   * submitted CONCURRENTLY to the scheduler, so the cluster overlaps their
   * scans. A fused single-scan variant (multi-distinct aggregate) was
-  * measured 10× slower at sf0.1 because Catalyst plans n distinct groups
-  * as an Expand (row count × n) followed by a giant shuffle; per-combo
-  * jobs shuffle only each combo's partial-agg output instead.
+  * measured 10× slower at sf0.1 over tuples and 1.5× slower at sf100
+  * over hashes (900.2 s vs 599.6 s, BENCH_SF100.md round 15): Catalyst
+  * plans n distinct groups as an Expand (row count × n) followed by a
+  * giant shuffle; per-combo jobs shuffle only each combo's partial-agg
+  * output instead.
   *
-  * Also measured and REJECTED (round 6, 60 M rows, 4 candidates,
-  * maxKeySize 4): a single-scan `approx_count_distinct(struct(...))`
-  * prefilter to skip exact jobs for combos far from unique. It has no
-  * Expand problem, but it was ~20% SLOWER end-to-end (isolated min
-  * 48.5 → 58.5 s): the concurrent exact jobs already overlap their
-  * scans over the cached projection, so the fused HLL pass only adds a
-  * serialized CPU-heavy multi-struct-hash scan whose savings don't
-  * cover its cost at realistic combo counts.
-  *
-  * Re-measured at 600 M rows (round 9), rejection CONFIRMED with a
-  * sharper reason: the sketch cannot prune near-keys. On the scaled
-  * data every size-2+ combo is ≥99.9% unique (exact 599.94 M of
-  * 600 M), while HLL at rsd 0.01 estimated 592–604 M — the 1% sketch
-  * error is 100× larger than the non-uniqueness it would need to
-  * resolve, so every combo stays inside any sound verification margin
-  * and the exact jobs run anyway (the ~169 s of HLL passes would be
-  * pure overhead on the ~723 s exact lattice). An HLL prefilter only
-  * pays off when candidate combos are far from unique, which is
-  * exactly when the profiler-style [[candidateReport]] is the right
-  * tool instead.
+  * Before the exact jobs, one shared HLL scan ([[plausibleByHll]])
+  * prunes the combos that are far from unique. A sketch cannot prune a
+  * near-key (at 600 M rows every size-2+ combo was ≥99.9% unique, well
+  * inside HLL error), so every key and near-key still gets its exact
+  * job and answers are unchanged.
   *
   * What DOES work (round 12, [[isKeyByHash]]): [[findMinimalKeys]] only
   * needs a key/non-key VERDICT, never the distinct count — and
@@ -235,14 +222,10 @@ object KeyFinder {
     * overwhelmingly duplicate-heavy. The win is structural: ALL combos
     * of a size share ONE scan (HLL partials merge map-side, no
     * shuffle), where the exact path runs one full countDistinct job
-    * per combo. Toggle: SPARK_GRAFT_KEYFINDER_PREFILTER=off (the
-    * sf100 A/B lever; adopted after measuring — see BENCH_SF100.md).
+    * per combo. Adopted after the sf100 A/B in BENCH_SF100.md.
     */
   val PrefilterRsd = 0.02
   val PrefilterThreshold = 0.8
-
-  private def prefilterEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_KEYFINDER_PREFILTER").contains("off")
 
   /** ONE-pass approx-distinct for every combo of a size: returns the
     * combos whose estimate clears [[PrefilterThreshold]] — the only
@@ -259,45 +242,6 @@ object KeyFinder {
     combos.zipWithIndex.collect {
       case (cb, i) if row.getLong(i) >= cut => cb
     }
-  }
-
-  /** Round-15 A/B lever (verdict-r14 #6): fold ALL of a size's
-    * surviving exact hash-witness jobs into ONE multi-countDistinct
-    * aggregate. Catalyst plans n distinct groups as an Expand (n× the
-    * rows) feeding one shuffle — the shape round 6 measured 10× slower
-    * over TUPLES — but here every distinct argument is an 8-byte
-    * xxhash64, so the expanded row is (gid, long) and the map-side
-    * partial distinct dedups each group before the shuffle. One shared
-    * scan replaces n scans of the cached projection. Verdict semantics
-    * are identical: same hash counts, same [[HashDeficitBand]], same
-    * exact fallback per ambiguous combo.
-    * Toggle: SPARK_GRAFT_KEYFINDER_FUSED=on. Measured at sf100 and
-    * REJECTED as the default (BENCH_SF100.md round 15): 599.6 s
-    * per-combo vs 900.2 s fused — RewriteDistinctAggregates expands
-    * 600 M rows × groups before the partial aggregate, and the
-    * concurrent per-combo jobs already overlap their scans of the
-    * cached projection, so the fused plan serializes ~3× the aggregate
-    * work. The round-6 Expand verdict holds at the hash shape too.
-    */
-  private def fusedEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_KEYFINDER_FUSED").contains("on")
-
-  private[graft] def keysByHashFused(proj: DataFrame, combos: Seq[Seq[String]],
-                                     total: Long): Seq[Seq[String]] = {
-    if (combos.isEmpty) return Nil
-    val aggs = combos.zipWithIndex.map { case (cb, i) =>
-      countDistinct(xxhash64(cb.map(col): _*)).as(s"d_$i")
-    }
-    val row = proj.agg(aggs.head, aggs.tail: _*).collect()(0)
-    combos.zipWithIndex.filter { case (cb, i) =>
-      val hashed = row.getLong(i)
-      if (hashed == total) true
-      else if (total - hashed > HashDeficitBand) false
-      else // collisions possible: exact tuple-distinct decides
-        proj.select(cb.map(col): _*)
-          .agg(countDistinct(cb.head, cb.tail: _*))
-          .collect()(0).getLong(0) == total
-    }.map(_._1)
   }
 
   /** Size-ascending minimal-key search with the reference's early stop:
@@ -331,13 +275,9 @@ object KeyFinder {
           .filter(_.forall(!nullCols.contains(_))).toSeq
         // one shared HLL pass deletes the exact jobs of overwhelmingly
         // duplicate-heavy combos; keys/near-keys always pass through
-        val survivors =
-          if (prefilterEnabled) plausibleByHll(proj, combos, total)
-          else combos
-        val keyCombos =
-          if (fusedEnabled) keysByHashFused(proj, survivors, total)
-          else survivors.par.filter(cb => isKeyByHash(proj, cb, total)).seq
-        val keys = keyCombos.map(_.mkString(",")).sorted
+        val keys = plausibleByHll(proj, combos, total)
+          .par.filter(cb => isKeyByHash(proj, cb, total)).seq
+          .map(_.mkString(",")).sorted
         (size, keys)
       }.collectFirst { case (size, keys) if keys.nonEmpty => (size, keys) }
     }

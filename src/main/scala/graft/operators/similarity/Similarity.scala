@@ -1038,13 +1038,15 @@ object Similarity {
       def finish(report: DataFrame): DataFrame =
         if (!release) report
         else {
-          val spark = report.sparkSession
-          val rows = java.util.Arrays.asList(report.collect(): _*)
-          cps.foreach(_.queryExecution.analyzed.collect {
-            case lr: org.apache.spark.sql.execution.LogicalRDD =>
-              lr.rdd.unpersist(blocking = false)
-          })
-          spark.createDataFrame(rows, report.schema)
+          // released on the error path too: a throwing collect must not
+          // leave the blocks to the ContextCleaner
+          val rows =
+            try java.util.Arrays.asList(report.collect(): _*)
+            finally cps.foreach(_.queryExecution.analyzed.collect {
+              case lr: org.apache.spark.sql.execution.LogicalRDD =>
+                lr.rdd.unpersist(blocking = false)
+            })
+          report.sparkSession.createDataFrame(rows, report.schema)
         }
     }
 
@@ -1546,8 +1548,7 @@ object Similarity {
       * the overrides, and report recall@k with the DEFAULT fixed pool
       * vs the ADVISED per-cell pools against the exact ground truth —
       * two rows (`variant` = default/advised) the driver trends
-      * round-over-round, turning the one-off AnnAdvisedBench receipt
-      * into a gate number. The coded frame is checkpointed once and
+      * round-over-round (registered as `ann_advised_recall`). The coded frame is checkpointed once and
       * reused by the advisor aggregation and both query passes, so the
       * cost over a plain recall row is one aggregation + one extra
       * query pass; the override map stays ≤ nCells entries (the same

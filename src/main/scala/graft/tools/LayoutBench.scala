@@ -43,12 +43,10 @@ object LayoutBench {
   val Buckets = 64
   val Db = "graft_layout"
 
-  private def session(warehouse: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = GraftSessionBuilder.build(cpus, warehouse)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // explicit warehouse dir: catalog-table files land under the layout
+  // root, not the working directory
+  private def session(warehouse: String): SparkSession =
+    graft.GraftSession.local(graft.GraftSession.cpus, "spark.sql.warehouse.dir" -> warehouse)
 
   /** The bucketed tables per variant: table → (bucket col, location). */
   private def bucketedTables(layoutRoot: String, variant: String)
@@ -214,20 +212,4 @@ object LayoutBench {
       "usage: LayoutBench write <flatDir> <layoutRoot> [variant] | " +
       "bench <flatDir> <layoutRoot> <variant> <q1,q2,…>")
   }
-}
-
-/** Session assembly shared by layout tooling — mirrors Bench's builder
-  * (GraftSession.tune, extensions, 32 shuffle partitions) plus an
-  * explicit warehouse dir so catalog-table files land under the layout
-  * root, not the repo cwd.
-  */
-private object GraftSessionBuilder {
-  def build(cpus: String, warehouse: String): SparkSession =
-    graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for benchmark falsification: replicates a
@@ -231,17 +231,11 @@ object ScaleUp {
     // other tables are unchanged by the gauss mode — reuse an existing
     // scaled directory beside it instead of duplicating 10+ GB)
     val gaussOnly = args.length == 4 && args(3) == "gauss-only"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // If events.ts is the old TIMESTAMP(NANOS) layout, read it as a
-      // raw long and write it back as a raw long; a plain-micros layout
-      // round-trips as timestamp[us] untouched. Either way the scaled
-      // directory stays readable by Tables' schema-probing load.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the recommended nanosAsLong reads an old TIMESTAMP(NANOS)
+    // events.ts as a raw long and writes it back as one; a plain-micros
+    // layout round-trips untouched. Either way the scaled directory
+    // stays readable by Tables' schema-probing load.
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     if (!gaussOnly) dims.foreach { t =>
       spark.read.parquet(s"$in/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")

@@ -196,4 +196,15 @@ class AnnShareSpec extends AnyFunSuite {
       assert(sweepReleased == sweepKept, "sweep(): release toggle changed the report rows")
     } finally spark.conf.set("graft.ann.releaseCheckpoints", "true")
   }
+
+  test("checkpoint release on the error path: a report whose collect throws frees every checkpoint") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val t = new Similarity.RecallReport.CpTracker(release = true)
+    val (a, b) = (t(spark.range(100).toDF("id")), t(spark.range(50).toDF("id")))
+    assert(sc.getPersistentRDDs.keySet.diff(before).size == 2)
+    val boom = udf((x: Long) => if (x >= 0) throw new IllegalStateException("boom") else x)
+    intercept[Exception](t.finish(a.join(b, "id").select(boom(col("id")))))
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
 }

@@ -106,21 +106,6 @@ class CoreOperatorsSpec extends AnyFunSuite {
     assert(keys.toSeq == Seq(("a,b", 2)))
   }
 
-  test("keyfinder: fused multi-countDistinct leg returns the per-combo verdicts") {
-    // the round-15 A/B lever (one Expand-shared scan instead of one
-    // job per combo) must be verdict-identical to the sequential
-    // hash-witness path: keys pass, near-keys (one duplicate) fail
-    import spark.implicits._
-    val df = (0 until 1000).map(i => (i, i / 2, if (i == 999) 998 else i))
-      .toDF("k", "half", "nearkey")
-    val combos = Seq(Seq("k"), Seq("half"), Seq("nearkey"),
-      Seq("half", "nearkey"), Seq("k", "half"))
-    // (half, nearkey) is a NEAR-key: rows 998/999 both map to
-    // (499, 998) — a single duplicate the exact fallback must catch
-    val fused = KeyFinder.keysByHashFused(df, combos, total = 1000L)
-    assert(fused == Seq(Seq("k"), Seq("k", "half")), s"fused verdicts: $fused")
-  }
-
   test("keyfinder: near-key with a single duplicate is rejected (hash-witness fallback)") {
     import spark.implicits._
     // 100 rows, exactly one duplicated (a, s) pair: the hash-witness

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract lock on the measured session defaults — every value here
@@ -36,5 +40,19 @@ class GraftSessionSpec extends AnyFunSuite {
     // surprising side effect; the flag lives in `recommended` now and
     // Tables' schema probe rebuilds proper micros from the raw longs.
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("the factory session carries every recommended conf, UTC, cpus shuffle partitions and the extensions") {
+    GraftSession.recommended.foreach { case (k, v) => assert(conf.get(k).replaceAll("b$", "") == v, k) }
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(TestSpark.spark.sparkContext.master == "local[4]" && conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(TestSpark.spark.sql("SELECT cosine_similarity(array(1.0F), array(2.0F))").head().getDouble(0) == 1.0)
+  }
+
+  test("GraftSession.scala is the only file under src that builds a session") {
+    val needle = "SparkSession" + ".builder" // split so this file does not match itself
+    val hits = Files.walk(Paths.get("src")).iterator.asScala.filter(Files.isRegularFile(_))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle)).map(_.toString).toSeq
+    assert(hits == Seq("src/main/scala/graft/GraftSession.scala"))
   }
 }
